@@ -1113,7 +1113,10 @@ def stream_cdc_apply(changes: DataFrame, table_dir: str,
       run-boundary test on that sort, and the file-group assignment
       reuses the same distribution+sort (Catalyst plans no second
       exchange), so each batch is one shuffle + one
-      dynamic-partitioned write to ``versions/v{N}/_b=i/_f=j``;
+      dynamic-partitioned write to ``versions/v{N}/_b=i/_f=j``,
+      straight from that exchange with nothing cached; the file-group
+      stats are then read back from the committed files (the stat
+      column only), so the manifest describes the bytes on disk;
     * the ``LATEST`` manifest file flips atomically after every
       touched file group is written — readers never see a
       half-merged table;
@@ -1182,6 +1185,33 @@ def _cdc_table_paths(table_dir: str) -> list[str]:
     return sorted(ent["path"]
                   for ents in _load_manifest(pointer)["buckets"].values()
                   for ent in ents)
+
+
+def _write_file_groups(packed: DataFrame, path: str,
+                       stat_col: str) -> dict[int, list[dict]]:
+    """Write ``packed`` (rows tagged with bucket ``_b`` and file group
+    ``_f``) ONCE as ``path/_b=i/_f=j`` and return its manifest entries
+    per bucket, ordered by file group. The ``kmin``/``kmax``/``knull``
+    stats are read back from the committed files (a scan of the stat
+    column alone), not recomputed from ``packed``: nothing is cached,
+    and the manifest describes exactly the bytes on disk."""
+    import os
+
+    packed.write.mode("overwrite").partitionBy("_b", "_f").parquet(path)
+    stats = packed.sparkSession.read.schema(packed.schema).parquet(path) \
+        .groupBy("_b", "_f").agg(
+            F.min(stat_col).alias("kmin"),
+            F.max(stat_col).alias("kmax"),
+            F.max(F.col(stat_col).isNull().cast("int")).alias("knull")
+        ).collect()
+    groups: dict[int, list[dict]] = {}
+    for r in sorted(stats, key=lambda r: (r["_b"], r["_f"])):
+        groups.setdefault(r["_b"], []).append({
+            "path": os.path.join(path, f"_b={r['_b']}", f"_f={r['_f']}"),
+            "kmin": _stat_val(r["kmin"]),
+            "kmax": _stat_val(r["kmax"]),
+            "knull": bool(r["knull"])})
+    return groups
 
 
 def _cdc_apply_fn(table_dir: str, key_cols: list[str],
@@ -1307,28 +1337,12 @@ def _cdc_apply_fn(table_dir: str, key_cols: list[str],
                 "_f",
                 F.floor((F.row_number().over(wb) - 1)
                         / F.lit(target_file_rows)))
-            .persist()
         )
-        vpath = os.path.join(base, f"v{batch_id:09d}")
-        merged.write.mode("overwrite").partitionBy("_b", "_f") \
-            .parquet(vpath)
-        # per-file-group stats: bounded collect (one row per file group)
-        stats = merged.groupBy("_b", "_f").agg(
-            F.min(stat_col).alias("kmin"),
-            F.max(stat_col).alias("kmax"),
-            F.max(F.col(stat_col).isNull().cast("int")).alias("knull")
-        ).collect()
-        merged.unpersist()
+        groups = _write_file_groups(
+            merged, os.path.join(base, f"v{batch_id:09d}"), stat_col)
         batch_df.unpersist()
         for b in touched:
-            manifest[str(b)] = carried[b]
-        for r in sorted(stats, key=lambda r: (r["_b"], r["_f"])):
-            manifest[str(r["_b"])].append({
-                "path": os.path.join(vpath, f"_b={r['_b']}",
-                                     f"_f={r['_f']}"),
-                "kmin": _stat_val(r["kmin"]),
-                "kmax": _stat_val(r["kmax"]),
-                "knull": bool(r["knull"])})
+            manifest[str(b)] = carried[b] + groups.get(b, [])
         committed.update({"buckets": manifest, "batch": batch_id,
                           "n_buckets": n_buckets, "fps": fps,
                           "key_cols": list(key_cols),
@@ -1366,7 +1380,6 @@ def compact_cdc_table(spark: SparkSession, table_dir: str,
     todo = {b for b, ents in manifest.items() if len(ents) > 1}
     if todo:
         bucket_expr = F.pmod(F.hash(*key_cols), F.lit(man["n_buckets"]))
-        stat_col = key_cols[0]
         paths = [e["path"] for b in todo for e in manifest[b]]
         rows = spark.read.option("mergeSchema", "true").parquet(*paths) \
             .withColumn("_b", bucket_expr)
@@ -1375,30 +1388,16 @@ def compact_cdc_table(spark: SparkSession, table_dir: str,
                                            for c in key_cols])
         packed = rows.withColumn(
             "_f", F.floor((F.row_number().over(wb) - 1)
-                          / F.lit(target_file_rows))).persist()
+                          / F.lit(target_file_rows)))
         # generation counter, NOT the batch id: a re-run without an
         # intervening batch must write a FRESH dir — reusing the name
         # would overwrite the very files this compaction is reading.
         gen = int(man.get("gen", 0)) + 1
         cpath = os.path.join(table_dir, "versions",
                              f"c{man['batch']:09d}g{gen:04d}")
-        packed.write.mode("overwrite").partitionBy("_b", "_f") \
-            .parquet(cpath)
-        stats = packed.groupBy("_b", "_f").agg(
-            F.min(stat_col).alias("kmin"),
-            F.max(stat_col).alias("kmax"),
-            F.max(F.col(stat_col).isNull().cast("int")).alias("knull")
-        ).collect()
-        packed.unpersist()
+        groups = _write_file_groups(packed, cpath, key_cols[0])
         for b in todo:
-            manifest[b] = []
-        for r in sorted(stats, key=lambda r: (r["_b"], r["_f"])):
-            manifest[str(r["_b"])].append({
-                "path": os.path.join(cpath, f"_b={r['_b']}",
-                                     f"_f={r['_f']}"),
-                "kmin": _stat_val(r["kmin"]),
-                "kmax": _stat_val(r["kmax"]),
-                "knull": bool(r["knull"])})
+            manifest[b] = groups.get(int(b), [])
         man["buckets"] = manifest
         man["gen"] = gen
         _commit_manifest(table_dir, man, base_etag)
@@ -1427,7 +1426,6 @@ def rebucket_cdc_table(spark: SparkSession, table_dir: str,
     manifest: dict[str, list[dict]] = man["buckets"]
     key_cols = man["key_cols"]
     bucket_expr = F.pmod(F.hash(*key_cols), F.lit(new_n_buckets))
-    stat_col = key_cols[0]
     paths = [e["path"] for ents in manifest.values() for e in ents]
     if paths:
         rows = spark.read.option("mergeSchema", "true").parquet(*paths) \
@@ -1437,26 +1435,13 @@ def rebucket_cdc_table(spark: SparkSession, table_dir: str,
                                            for c in key_cols])
         packed = rows.withColumn(
             "_f", F.floor((F.row_number().over(wb) - 1)
-                          / F.lit(target_file_rows))).persist()
+                          / F.lit(target_file_rows)))
         gen = int(man.get("gen", 0)) + 1
         cpath = os.path.join(table_dir, "versions",
                              f"c{man['batch']:09d}g{gen:04d}")
-        packed.write.mode("overwrite").partitionBy("_b", "_f") \
-            .parquet(cpath)
-        stats = packed.groupBy("_b", "_f").agg(
-            F.min(stat_col).alias("kmin"),
-            F.max(stat_col).alias("kmax"),
-            F.max(F.col(stat_col).isNull().cast("int")).alias("knull")
-        ).collect()
-        packed.unpersist()
-        manifest = {str(b): [] for b in range(new_n_buckets)}
-        for r in sorted(stats, key=lambda r: (r["_b"], r["_f"])):
-            manifest[str(r["_b"])].append({
-                "path": os.path.join(cpath, f"_b={r['_b']}",
-                                     f"_f={r['_f']}"),
-                "kmin": _stat_val(r["kmin"]),
-                "kmax": _stat_val(r["kmax"]),
-                "knull": bool(r["knull"])})
+        groups = _write_file_groups(packed, cpath, key_cols[0])
+        manifest = {str(b): groups.get(b, [])
+                    for b in range(new_n_buckets)}
         man["buckets"] = manifest
         man["n_buckets"] = new_n_buckets
         man["gen"] = gen
@@ -1488,7 +1473,6 @@ def purge_tombstones(spark: SparkSession, table_dir: str,
         return sorted(e["path"] for ents in manifest.values() for e in ents)
     key_cols = man["key_cols"]
     bucket_expr = F.pmod(F.hash(*key_cols), F.lit(man["n_buckets"]))
-    stat_col = key_cols[0]
     paths = [e["path"] for ents in manifest.values() for e in ents]
     if paths:
         rows = (spark.read.option("mergeSchema", "true").parquet(*paths)
@@ -1499,26 +1483,13 @@ def purge_tombstones(spark: SparkSession, table_dir: str,
                                            for c in key_cols])
         packed = rows.withColumn(
             "_f", F.floor((F.row_number().over(wb) - 1)
-                          / F.lit(target_file_rows))).persist()
+                          / F.lit(target_file_rows)))
         gen = int(man.get("gen", 0)) + 1
         cpath = os.path.join(table_dir, "versions",
                              f"c{man['batch']:09d}g{gen:04d}")
-        packed.write.mode("overwrite").partitionBy("_b", "_f") \
-            .parquet(cpath)
-        stats = packed.groupBy("_b", "_f").agg(
-            F.min(stat_col).alias("kmin"),
-            F.max(stat_col).alias("kmax"),
-            F.max(F.col(stat_col).isNull().cast("int")).alias("knull")
-        ).collect()
-        packed.unpersist()
+        groups = _write_file_groups(packed, cpath, key_cols[0])
         manifest = {b: [] for b in manifest}
-        for r in sorted(stats, key=lambda r: (r["_b"], r["_f"])):
-            manifest.setdefault(str(r["_b"]), []).append({
-                "path": os.path.join(cpath, f"_b={r['_b']}",
-                                     f"_f={r['_f']}"),
-                "kmin": _stat_val(r["kmin"]),
-                "kmax": _stat_val(r["kmax"]),
-                "knull": bool(r["knull"])})
+        manifest.update({str(b): ents for b, ents in groups.items()})
         man["buckets"] = manifest
         man["gen"] = gen
         _commit_manifest(table_dir, man, base_etag)

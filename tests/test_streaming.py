@@ -1448,6 +1448,63 @@ class TestStreamCdcApply:
         got = {r.k: r.v for r in read_cdc_table(spark, tdir).collect()}
         assert got[7] == 777 and len(got) == 50
 
+    def test_manifest_stats_match_committed_files(self, spark, tmp_path):
+        """Every writer (merge, compact, rebucket, purge) leaves one
+        parquet file per ``_b=i/_f=j`` dir, records in LATEST exactly
+        the min/max/null-presence of the stat column those files hold,
+        and leaks no cached frame."""
+        from gasket_spark.streaming.core import (
+            compact_cdc_table, purge_tombstones, rebucket_cdc_table,
+            resolve_manifest, stream_cdc_apply,
+        )
+
+        src = str(tmp_path / "src")
+        os.makedirs(src)
+        for i in range(3):
+            f = os.path.join(src, f"{i}.json")
+            with open(f, "w") as fh:
+                for j in range(12):
+                    k = None if (i, j) == (1, 4) else (i * 5 + j) % 20
+                    fh.write(json.dumps({"k": k, "o": i, "v": j,
+                                         "dele": j % 5 == 0}) + "\n")
+            os.utime(f, (1_600_000_000 + i * 500,) * 2)
+        stream = spark.readStream \
+            .schema("k long, o long, v long, dele boolean") \
+            .option("maxFilesPerTrigger", 1).json(src)
+        tdir = str(tmp_path / "table")
+        jsc = spark.sparkContext._jsc
+        cached = jsc.getPersistentRDDs().size()
+
+        def check():
+            import pyarrow.parquet as pq
+
+            man = resolve_manifest(tdir)
+            assert jsc.getPersistentRDDs().size() == cached
+            ents = [e for es in man["buckets"].values() for e in es]
+            assert ents
+            for e in ents:
+                files = [f for f in os.listdir(e["path"])
+                         if f.endswith(".parquet")]
+                assert len(files) == 1, e["path"]
+                ks = pq.read_table(os.path.join(e["path"], files[0]),
+                                   columns=["k"]).column("k").to_pylist()
+                vals = [k for k in ks if k is not None]
+                assert (e["kmin"], e["kmax"], e["knull"]) == (
+                    min(vals, default=None), max(vals, default=None),
+                    None in ks), e
+            return man
+
+        stream_cdc_apply(stream, tdir, ["k"], ["o"], n_buckets=4,
+                         target_file_rows=3, delete_col="dele")
+        assert check()["batch"] == 2
+        compact_cdc_table(spark, tdir, ["k"], target_file_rows=3)
+        check()
+        rebucket_cdc_table(spark, tdir, new_n_buckets=3,
+                           target_file_rows=3)
+        check()
+        purge_tombstones(spark, tdir, target_file_rows=3)
+        check()
+
 
 def _has_protobuf() -> bool:
     try:
@@ -1556,6 +1613,30 @@ class TestBatchCdcApply:
         with pytest.raises(Exception, match="fingerprint|regression"):
             batch_cdc_apply(bad, tdir, key_cols=["k"], order_cols=["o"],
                             n_buckets=2, target_file_rows=4)
+
+    def test_empty_batch_commits_unchanged_buckets(self, spark, tmp_path):
+        """An empty batch writes a version dir with no data files; the
+        stats read back from it are empty, so its version commits the
+        previous buckets unchanged and later batches merge on."""
+        from gasket_spark.sources.cdc import read_cdc_table
+        from gasket_spark.streaming.core import (
+            batch_cdc_apply, resolve_manifest,
+        )
+
+        schema = "k int, o int, val int"
+        b0 = spark.createDataFrame([(k, 0, k) for k in range(6)], schema)
+        b2 = spark.createDataFrame([(1, 2, 100), (3, 1, 300), (7, 2, 700)],
+                                   schema)
+        tdir = str(tmp_path / "cdc")
+        batch_cdc_apply([b0, spark.createDataFrame([], schema), b2], tdir,
+                        key_cols=["k"], order_cols=["o"], n_buckets=2,
+                        target_file_rows=4)
+        v0, v1 = resolve_manifest(tdir, 0), resolve_manifest(tdir, 1)
+        assert v1["batch"] == 1 and v1["buckets"] == v0["buckets"]
+        got = {(r["k"], r["o"], r["val"])
+               for r in read_cdc_table(spark, tdir).collect()}
+        assert got == {(0, 0, 0), (1, 2, 100), (2, 0, 2), (3, 1, 300),
+                       (4, 0, 4), (5, 0, 5), (7, 2, 700)}
 
 
 class TestTzEnvInvariance:

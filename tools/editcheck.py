@@ -9,10 +9,12 @@ this tool derives it from git:
 2. map changed lines to enclosing top-level functions via ast
    (decorators included, so oracle-string edits inside ``@query(...)``
    count as edits of the query they decorate),
-3. changed ``q_*`` functions are directly affected; changed helper
-   functions/classes propagate to every ``q_*`` whose function body
-   references the helper's name (one hop — matching how helpers are
-   called from query modules),
+3. changed ``q_*`` functions are directly affected; the changed
+   helper functions/classes are first closed over every top-level
+   ``gasket_spark/`` def that references one of them (to a fixed
+   point: a helper reached through another helper still counts), and
+   every ``q_*`` whose body references a name in that closure is
+   affected (see :func:`affected_queries`),
 4. compare against the projected demoted/new set (rank < 2 from
    ``_signal_rank``) and FAIL (exit 1) on any affected query that a
    stale green would certify.
@@ -267,20 +269,58 @@ def top_level_spans(path: str) -> list[tuple[str, int, int]]:
     return spans
 
 
-def query_bodies() -> dict[str, str]:
-    """q_* name -> source text of its function (decorator included)."""
-    bodies: dict[str, str] = {}
-    qdir = os.path.join(REPO, "gasket_spark", "queries")
-    for fn in sorted(os.listdir(qdir)):
-        if not fn.endswith(".py") or fn == "__init__.py":
-            continue
-        rel = f"gasket_spark/queries/{fn}"
-        src = open(os.path.join(REPO, rel), encoding="utf-8").read()
-        lines = src.splitlines()
-        for name, a, b in top_level_spans(rel):
+def module_defs() -> dict[str, set[str]]:
+    """Top-level def/class name -> the names its code references
+    (``Name`` ids and ``Attribute`` attrs, decorators included;
+    docstrings and comments do not count), over every ``gasket_spark/``
+    module except the registry ``queries/__init__.py``. A name defined
+    in several modules gets the union."""
+    defs: dict[str, set[str]] = {}
+    root = os.path.join(REPO, "gasket_spark")
+    for dirpath, _, files in sorted(os.walk(root)):
+        for fn in sorted(files):
+            path = os.path.join(dirpath, fn)
+            if not fn.endswith(".py") or path.endswith("queries/__init__.py"):
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                     ast.ClassDef)):
+                    defs.setdefault(node.name, set()).update(
+                        n.id if isinstance(n, ast.Name) else n.attr
+                        for n in ast.walk(node)
+                        if isinstance(n, (ast.Name, ast.Attribute)))
+    return defs
+
+
+def affected_queries(changed: set[str],
+                     defs: dict[str, set[str]]) -> dict[str, set[str]]:
+    """q_* name -> the ``changed`` helper names it reaches. ``defs`` maps
+    each top-level def to the identifiers it references
+    (:func:`module_defs`). First close ``changed`` over the non-query
+    defs that reference a name already in the set, up to a fixed point,
+    then map every q_* def that references a name in the closure."""
+    reach = {h: {h} for h in changed}       # name -> changed roots behind it
+    grew = True
+    while grew:
+        grew = False
+        for name, idents in defs.items():
             if name.startswith("q_"):
-                bodies[name] = "\n".join(lines[a - 1:b])
-    return bodies
+                continue
+            roots = set().union(*(r for h, r in reach.items()
+                                  if h != name and h in idents))
+            if not roots <= reach.get(name, set()):
+                reach.setdefault(name, set()).update(roots)
+                grew = True
+    out: dict[str, set[str]] = {}
+    for q, idents in defs.items():
+        if q.startswith("q_"):
+            roots = set().union(*(r for h, r in reach.items()
+                                  if h != q and h in idents))
+            if roots:
+                out[q] = roots
+    return out
 
 
 def main() -> None:
@@ -336,17 +376,19 @@ def main() -> None:
                 else:
                     changed_helpers.append((name, path))
 
-    bodies = query_bodies()
-    for helper, path in set(changed_helpers):
-        pat = re.compile(rf"\b{re.escape(helper)}\b")
-        users = [q for q, body in bodies.items() if pat.search(body)]
-        if not users:
-            warnings.append(f"changed helper {helper} ({path}) has no "
-                            "direct q_* caller — indirect use? check "
-                            "by hand")
-        for q in users:
-            affected.setdefault(q, set()).add(f"calls {helper}")
-            qpaths.setdefault(q, set()).add(path)
+    helper_paths: dict[str, set[str]] = {}
+    for helper, path in changed_helpers:
+        helper_paths.setdefault(helper, set()).add(path)
+    users = affected_queries(set(helper_paths), module_defs())
+    for helper in sorted(helper_paths.keys()
+                         - set().union(*users.values())):
+        warnings.append(f"changed helper {helper} "
+                        f"({', '.join(sorted(helper_paths[helper]))}) "
+                        "reaches no q_* query — check by hand")
+    for q, roots in users.items():
+        for helper in roots:
+            affected.setdefault(q, set()).add(f"reaches {helper}")
+            qpaths.setdefault(q, set()).update(helper_paths[helper])
 
     from gasket_spark.queries import QUERIES, _signal_rank
     rank = _signal_rank()
