@@ -321,7 +321,7 @@ def main() -> None:
     # extends the set to every cache-consulting headline query:
     # results (_PAIR_CACHE pairs for ngram/components,
     # _PREFIX_PAIR_CACHE, _BPE_MERGE_CACHE for bpe_train/tokens),
-    # plan-persist intermediates (_plan_persist_cached: theta,
+    # plan-persist intermediates (_plan_persist_cached: theta, collocations,
     # containment, winnow, edit, semantic, semantic_incr), and the
     # graph _EDGE_CACHE consumers (triangles, sssp). Within one bench
     # invocation later queries still see earlier queries' caches
@@ -330,7 +330,8 @@ def main() -> None:
     cold_only = {
         "q_dedup_ngram", "q_dedup_prefix", "q_dedup_components",
         "q_bpe_train", "q_bpe_tokens",
-        "q_theta_setops", "q_dedup_containment", "q_fingerprint_winnow",
+        "q_theta_setops", "q_collocations", "q_dedup_containment",
+        "q_fingerprint_winnow",
         "q_dedup_edit", "q_dedup_semantic", "q_dedup_semantic_incr",
         "q_graph_triangles", "q_graph_sssp",
     }

@@ -2624,43 +2624,47 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     away except within an ulp of a micro boundary, same as any
     rounding scheme can do). The unigram tables broadcast; top-20 is
     TakeOrdered, never a global sort."""
-    docs = read_table(spark, sf_dir, "documents")
-    t = F.split(F.lower("text"), " ")
-    bg = docs.select(
-        F.explode(F.zip_with(
-            F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0))),
-            F.slice(t, 2, F.greatest(F.size(t) - 1, F.lit(0))),
-            lambda a, b: F.struct(a.alias("t1"), b.alias("t2"))))
-        .alias("p")
-    ).select("p.t1", "p.t2")
-    # persist: four consumers (pairs, both marginals, the total) read
-    # the bigram table — without the pin, Catalyst re-executes the
-    # corpus-scale bigram shuffle once PER consumer (verified:
-    # ReusedExchange does not fire across these subplans). The cache
-    # is vocab²-sized, not corpus-sized; lifetime is LRU.
-    c12 = bg.groupBy("t1", "t2").agg(F.count(F.lit(1)).alias("n12")) \
-        .persist()
-    # eager fill (r14): the two marginal broadcasts, the total, and
-    # the main join race this cache cold — each re-ran the
-    # corpus-scale bigram shuffle on partitions not yet cached
-    c12.count()
-    c1 = c12.groupBy("t1").agg(F.sum("n12").alias("n1")) \
-        .withColumnRenamed("t1", "tt1")
-    c2 = c12.groupBy("t2").agg(F.sum("n12").alias("n2")) \
-        .withColumnRenamed("t2", "tt2")
-    tot = c12.agg(F.sum("n12").alias("nn"))
-    pmi = F.floor(F.log(
-        (F.col("n12") * F.col("nn")).cast("double")
-        / (F.col("n1") * F.col("n2")).cast("double"))
-        * F.lit(1e6) + F.lit(0.5))
-    return (
-        c12.filter(F.col("n12") >= 5)
-        .join(F.broadcast(c1), F.col("t1") == F.col("tt1"))
-        .join(F.broadcast(c2), F.col("t2") == F.col("tt2"))
-        .crossJoin(F.broadcast(tot))
-        .select("t1", "t2", "n12", pmi.alias("pmi_micro"))
-        .orderBy(F.desc("pmi_micro"), "t1", "t2").limit(20)
-    )
+    def _build():
+        docs = read_table(spark, sf_dir, "documents")
+        t = F.split(F.lower("text"), " ")
+        bg = docs.select(
+            F.explode(F.zip_with(
+                F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0))),
+                F.slice(t, 2, F.greatest(F.size(t) - 1, F.lit(0))),
+                lambda a, b: F.struct(a.alias("t1"), b.alias("t2"))))
+            .alias("p")
+        ).select("p.t1", "p.t2")
+        # persist: four consumers (pairs, both marginals, the total)
+        # read the bigram table — without the pin, Catalyst re-executes
+        # the corpus-scale bigram shuffle once PER consumer (verified:
+        # ReusedExchange does not fire across these subplans). The
+        # cache is vocab²-sized, not corpus-sized, and released through
+        # the plan-persist cache (free_session_caches).
+        c12 = bg.groupBy("t1", "t2").agg(
+            F.count(F.lit(1)).alias("n12")).persist()
+        # eager fill (r14): the two marginal broadcasts, the total, and
+        # the main join race this cache cold — each re-ran the
+        # corpus-scale bigram shuffle on partitions not yet cached
+        c12.count()
+        c1 = c12.groupBy("t1").agg(F.sum("n12").alias("n1")) \
+            .withColumnRenamed("t1", "tt1")
+        c2 = c12.groupBy("t2").agg(F.sum("n12").alias("n2")) \
+            .withColumnRenamed("t2", "tt2")
+        tot = c12.agg(F.sum("n12").alias("nn"))
+        pmi = F.floor(F.log(
+            (F.col("n12") * F.col("nn")).cast("double")
+            / (F.col("n1") * F.col("n2")).cast("double"))
+            * F.lit(1e6) + F.lit(0.5))
+        return (
+            c12.filter(F.col("n12") >= 5)
+            .join(F.broadcast(c1), F.col("t1") == F.col("tt1"))
+            .join(F.broadcast(c2), F.col("t2") == F.col("tt2"))
+            .crossJoin(F.broadcast(tot))
+            .select("t1", "t2", "n12", pmi.alias("pmi_micro"))
+            .orderBy(F.desc("pmi_micro"), "t1", "t2").limit(20)
+        ), (c12,)
+
+    return _plan_persist_cached(spark, sf_dir, "collocations", _build)
 
 
 @query(

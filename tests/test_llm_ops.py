@@ -1881,6 +1881,25 @@ class TestSessionCacheHygiene:
         n1 = QUERIES["q_dedup_ngram"](spark, sf).count()
         assert n1 == QUERIES["q_dedup_ngram"](spark, sf).count()
 
+    def test_collocations_bigram_cache_is_released(self, spark):
+        """q_collocations pins its bigram table through the plan-persist
+        cache: a second call reuses the first call's cache instead of
+        leaking another, free_session_caches releases it, and the
+        result does not change."""
+        from gasket_spark.queries import QUERIES, free_session_caches
+
+        free_session_caches(spark)
+        jsc = spark.sparkContext._jsc
+        baseline = len(dict(jsc.getPersistentRDDs()))
+        first = QUERIES["q_collocations"](spark, SF_SMALL).collect()
+        second = QUERIES["q_collocations"](spark, SF_SMALL).collect()
+        assert len(dict(jsc.getPersistentRDDs())) == baseline + 1
+        free_session_caches(spark)
+        assert len(dict(jsc.getPersistentRDDs())) == baseline
+        assert first and first == second
+        assert QUERIES["q_collocations"](spark, SF_SMALL).collect() == first
+        free_session_caches(spark)
+
 
 class TestShortNullDocRobustness:
     """The r13 review's confirmed-live crash class: fixtures have no

@@ -33,36 +33,39 @@ def test_entry_contract(spark):
 
 
 def test_verification_window_rotation():
-    """Registration order is the driver's verification scheduler: every
-    query with NO green CORRECTNESS row (rank 0, incl. new queries) and
-    every hand-pinned red must sort inside the first 50 registered
-    names, ahead of anything already verified — otherwise the bounded
-    driver window stops rotating (the round-3 failure mode)."""
-    from gasket_spark.queries import QUERIES, _signal_rank
+    """Registration order is the driver's verification schedule. It
+    sorts by (tier, round): tier 0 has no recorded green, tier 1 changed
+    code since its green (digest mismatch), tier 2 is fresh. So every
+    unverified or changed query sorts ahead of every fresh green, and
+    the oldest fresh greens rotate back first."""
+    from gasket_spark.queries import (
+        DIGESTS, QUERIES, _verified, verification_key)
 
     names = list(QUERIES)
-    rank = _signal_rank()
-    unverified = [n for n in names if rank.get(n, 0.0) <= 0.0]
-    front = set(names[:50])
-    # empty only once every registered query has a green row
-    assert set(unverified) <= front
-    # ranks are non-decreasing along the registration order
-    sigs = [rank.get(n, 0.0) for n in names]
-    assert sigs == sorted(sigs)
-    # queries edited in r5/r6 must re-verify BEFORE any fresh green
-    # rotates back in: each pending edit sorts ahead of every query
-    # whose signal post-dates the demotion rank. (They may sit just
-    # past the 50-window when a large batch of brand-new queries
-    # legitimately fills it — new queries have no signal at all and
-    # go first; the edits then lead the very next round's window.)
-    from gasket_spark.queries import _EDITED_R05, _EDITED_R06
+    key = verification_key(_verified(), DIGESTS)
+    keys = [key(n) for n in names]
+    assert keys == sorted(keys)
+    stale = [i for i, k in enumerate(keys) if k[0] < 2]
+    fresh = [i for i, k in enumerate(keys) if k[0] == 2]
+    assert not stale or not fresh or max(stale) < min(fresh)
 
-    pending = [n for n in (*_EDITED_R05, *_EDITED_R06)
-               if 0 < rank.get(n, 0.0) <= 4.0]
-    if pending:
-        last_pending = max(names.index(n) for n in pending)
-        fresh = [i for i, n in enumerate(names) if rank.get(n, 0.0) > 1.25]
-        assert not fresh or last_pending < min(fresh)
+
+def test_verified_records_the_newest_artifact():
+    """VERIFIED.json must be re-recorded (`python tools/windowcheck.py
+    record`) whenever a CORRECTNESS artifact lands; a forgotten step
+    fails here instead of freezing the window on stale greens."""
+    import math
+    import os
+    import re
+
+    from gasket_spark.queries import _verified
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    rounds = [int(m.group(1)) for p in os.listdir(root)
+              if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p))]
+    recorded = [rnd for rnd, _ in _verified().values()]
+    assert rounds and recorded
+    assert math.ceil(max(recorded)) == max(rounds)
 
 
 class TestCsvRoundTrip:

@@ -1,16 +1,15 @@
-"""Round-13 optimization profiler: per-query isolated timing via the
-noop sink (guide §1.4 — computes every column, no driver collect cost)
-plus `.explain("formatted")` capture into plans/r13/.
+"""Per-query profiler: isolated timing via the noop sink (computes
+every column, no driver collect cost) plus `.explain("formatted")`
+capture into plans/profile/.
 
 Usage:
-    python tools/profile_r13.py [sf_dir] q_a q_b ...   # subset
-    python tools/profile_r13.py [sf_dir] --all          # bench headline set
+    python tools/profile_queries.py [sf_dir] q_a q_b ...   # subset
+    python tools/profile_queries.py [sf_dir] --all          # bench headline set
 
-Writes plans/r13/<query>_<tag>.txt (tag via --tag, default "before")
-and prints one line per query: noop-sink seconds (median of N runs,
-default 3 — SPARK_GRAFT_PROFILE_RUNS) next to the bench-action
-seconds, so the two methodologies stay comparable. Jobs are labelled
-(guide §1.5) for UI debugging.
+Writes plans/profile/<query>_<tag>.txt (tag via --tag, default "before")
+and prints one line per query: its noop-sink seconds, the median of
+N runs (default 3 — SPARK_GRAFT_PROFILE_RUNS). Jobs are labelled with
+the query name for UI debugging.
 """
 
 from __future__ import annotations
@@ -36,7 +35,7 @@ def main() -> None:
     from gasket_spark.queries import QUERIES
     from gasket_spark.session import get_spark
 
-    spark = get_spark("gasket-profile-r13")
+    spark = get_spark("gasket-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     if args == ["--all"]:
@@ -53,7 +52,7 @@ def main() -> None:
         read_table(spark, sf_dir, t).count()
 
     outdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r13")
+        os.path.abspath(__file__))), "plans", "profile")
     os.makedirs(outdir, exist_ok=True)
 
     print(f"# sf_dir={sf_dir} runs={runs} tag={tag} "
@@ -65,7 +64,7 @@ def main() -> None:
         sc = spark.sparkContext
         ts = []
         for i in range(runs):
-            sc.setJobDescription(f"r13-profile {name} run{i}")
+            sc.setJobDescription(f"profile {name} run{i}")
             t0 = time.time()
             df = QUERIES[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
