@@ -23,9 +23,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-# query -> code digest (digest.py), taken once as the registry loads:
-# module-level caches fill as queries run, so a later recompute of
-# their data constants would differ
+# query -> code digest (digest.py), taken as the registry loads
 DIGESTS: dict[str, str] = {}
 
 

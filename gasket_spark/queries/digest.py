@@ -13,6 +13,10 @@ the query function BY NAME:
   closure cells;
 * every module-level data constant, as a canonical repr (sets and
   dicts sorted, so the digest is independent of ``PYTHONHASHSEED``).
+  A dict, list or set the package's own bytecode mutates in place
+  (``N[k] = v``, ``del N[k]``, ``N.clear()``) is runtime state — a
+  cache — not data, and is left out, so a digest does not depend on
+  what the process has run.
 
 Names resolve against the union of every ``gasket_spark`` module's
 namespace — every submodule is imported first, so a helper imported
@@ -26,6 +30,7 @@ past driver run verified.
 
 from __future__ import annotations
 
+import dis
 import hashlib
 import importlib
 import pkgutil
@@ -35,6 +40,12 @@ import types
 
 _COMPREHENSIONS = {"<listcomp>", "<setcomp>", "<dictcomp>", "<genexpr>"}
 _ADDRESS = re.compile(r" at 0x[0-9a-fA-F]+")
+_LOADS = {"LOAD_GLOBAL", "LOAD_NAME", "LOAD_DEREF", "LOAD_ATTR"}
+_MUTATORS = {"append", "extend", "insert", "remove", "pop", "popitem",
+             "clear", "update", "setdefault", "add", "discard", "sort",
+             "reverse"}
+# after ``LOAD N; LOAD k``: N[k] = v, del N[k], and N[k] += v (COPY)
+_SUBSCR_WRITES = {"STORE_SUBSCR", "DELETE_SUBSCR", "COPY"}
 
 
 def _canon(v: object) -> str | None:
@@ -128,6 +139,43 @@ def _object_piece(obj: object) -> tuple[str, list[str], list[object]]:
     return "\n".join(out), names, refs
 
 
+def _mutated(code: types.CodeType, names: set[str],
+             out: set[str]) -> None:
+    """Add to ``out`` each of ``names`` that ``code`` (or a code object
+    nested in it) stores or deletes a subscript of (a simple key:
+    ``N[k] = v``, ``N[k] += v``, ``del N[k]``) or calls an in-place
+    method on (``N.clear()``). A form this misses leaves a cache
+    hashed: extra queries front, none hides."""
+    if names.intersection(code.co_names):
+        ins = list(dis.get_instructions(code))
+        for a, b, c in zip(ins, ins[1:], ins[2:]):
+            if a.opname not in _LOADS or a.argval not in names:
+                continue
+            if b.opname in ("LOAD_METHOD", "LOAD_ATTR") and \
+                    b.argval in _MUTATORS or \
+                    b.opname.startswith("LOAD_") and \
+                    c.opname in _SUBSCR_WRITES:
+                out.add(a.argval)
+    for c in code.co_consts:
+        if isinstance(c, types.CodeType):
+            _mutated(c, names, out)
+
+
+def _codes(obj: object) -> list[types.CodeType]:
+    """The code objects of an own function, or of a class's members."""
+    if isinstance(obj, types.FunctionType):
+        return [obj.__code__]
+    out = []
+    for v in vars(obj).values():
+        if isinstance(v, (staticmethod, classmethod)):
+            v = v.__func__
+        if isinstance(v, property):
+            out += [f.__code__ for f in (v.fget, v.fset, v.fdel) if f]
+        elif isinstance(v, (types.FunctionType, type)):
+            out += _codes(v)
+    return out
+
+
 def _udf_traits(obj: object) -> str:
     # instance attributes only: a UDTF's returnType property parses its
     # DDL string through a live SparkContext
@@ -156,6 +204,8 @@ def query_digests() -> dict[str, str]:
 
     # name -> [(key, object)] over every module namespace
     index: dict[str, list[tuple[str, object]]] = {}
+    codes: dict[int, types.CodeType] = {}
+    mutable: set[str] = set()
     for mod in modules:
         for name, raw in vars(mod).items():
             if name.startswith("__") or isinstance(raw, types.ModuleType):
@@ -167,12 +217,20 @@ def query_digests() -> dict[str, str]:
                 key = f"{obj.__module__}.{obj.__qualname__}"
                 if obj is not raw and obj is not type(raw):
                     key += " " + _udf_traits(raw)
+                codes.update((id(c), c) for c in _codes(obj))
             elif _canon(raw) is not None:
                 key = f"{mod.__name__}:{name}={_canon(raw)}"
                 obj = None
+                if isinstance(raw, (dict, list, set)):
+                    mutable.add(name)
             else:
                 continue
             index.setdefault(name, []).append((key, obj))
+    state: set[str] = set()
+    for code in codes.values():
+        _mutated(code, mutable, state)
+    for name in state:
+        index[name] = [(k, o) for k, o in index[name] if o is not None]
 
     # key -> (piece hash, neighbour keys), filled lazily
     graph: dict[str, tuple[str, list[str]]] = {}

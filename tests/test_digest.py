@@ -125,6 +125,25 @@ def test_oracle_edit_changes_only_its_query(base, tmp_path):
     }) == {"q_topk"}
 
 
+def test_caches_do_not_enter_the_digest():
+    """Module-level caches fill as queries run; a digest taken after
+    they fill must equal the one the registry took as it loaded."""
+    from gasket_spark import io
+    from gasket_spark.queries import DIGESTS, llm, streamingq
+    from gasket_spark.queries.digest import query_digests
+
+    seq = streamingq._STREAM_SEQ[0]
+    io._NANOS_COLS_CACHE["/probe"] = ("stamp", ("ts",))
+    llm._BPE_MERGE_CACHE[("app", "/probe", "k")] = [("a", "b")]
+    streamingq._STREAM_SEQ[0] += 7
+    try:
+        assert query_digests() == DIGESTS
+    finally:
+        del io._NANOS_COLS_CACHE["/probe"]
+        del llm._BPE_MERGE_CACHE[("app", "/probe", "k")]
+        streamingq._STREAM_SEQ[0] = seq
+
+
 def test_verified_json_is_what_record_writes():
     """VERIFIED.json is derived state: re-recording it from the
     committed CORRECTNESS artifacts reproduces it byte for byte, so no

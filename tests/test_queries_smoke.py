@@ -32,12 +32,24 @@ def test_entry_contract(spark):
     assert len(qs) >= 15
 
 
+def _windowcheck():
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools"))
+    import windowcheck
+
+    return windowcheck
+
+
 def test_verification_window_rotation():
     """Registration order is the driver's verification schedule. It
     sorts by (tier, round): tier 0 has no recorded green, tier 1 changed
     code since its green (digest mismatch), tier 2 is fresh. So every
-    unverified or changed query sorts ahead of every fresh green, and
-    the oldest fresh greens rotate back first."""
+    unverified or changed query sorts ahead of every fresh green, the
+    oldest fresh greens rotate back first, and no never-verified or red
+    query falls outside the driver's window."""
     from gasket_spark.queries import (
         DIGESTS, QUERIES, _verified, verification_key)
 
@@ -48,24 +60,18 @@ def test_verification_window_rotation():
     stale = [i for i, k in enumerate(keys) if k[0] < 2]
     fresh = [i for i, k in enumerate(keys) if k[0] == 2]
     assert not stale or not fresh or max(stale) < min(fresh)
+    unverified = {n for n, k in zip(names, keys) if k[0] == 0}
+    assert unverified <= set(names[:_windowcheck().WINDOW])
 
 
 def test_verified_records_the_newest_artifact():
     """VERIFIED.json must be re-recorded (`python tools/windowcheck.py
     record`) whenever a CORRECTNESS artifact lands; a forgotten step
     fails here instead of freezing the window on stale greens."""
-    import math
-    import os
-    import re
-
     from gasket_spark.queries import _verified
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [int(m.group(1)) for p in os.listdir(root)
-              if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p))]
-    recorded = [rnd for rnd, _ in _verified().values()]
-    assert rounds and recorded
-    assert math.ceil(max(recorded)) == max(rounds)
+    assert _verified()
+    assert _windowcheck().unrecorded(_verified()) is None
 
 
 class TestCsvRoundTrip:

@@ -15,7 +15,9 @@ is committed). It reads every artifact, newest verdict wins: a
 hash-green counts as round N, a rows-only pass as N-0.5, a red drops
 the query. Each green's digest is computed on the tree that driver run
 verified — the parent of the commit that added the artifact, extracted
-with ``git archive`` and imported in a subprocess.
+with ``git archive`` and imported in a subprocess. ``record`` refuses
+an artifact whose queries are not the first N of that tree's
+registration order: then that tree is not the one the run verified.
 """
 
 from __future__ import annotations
@@ -36,16 +38,17 @@ sys.path.insert(0, REPO)
 
 ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 DIGEST_PY = os.path.join(REPO, "gasket_spark", "queries", "digest.py")
+WINDOW = 50  # queries the driver verifies per round
 # runs in a fresh interpreter on an extracted tree: this checkout's
 # digest.py, that tree's gasket_spark
-_TREE_DIGESTS = """
+_TREE_STATE = """
 import importlib.util, json, sys
 sys.path.insert(0, sys.argv[1])
 spec = importlib.util.spec_from_file_location("_digest", sys.argv[2])
 digest = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(digest)
-import gasket_spark.queries
-print(json.dumps(digest.query_digests()))
+from gasket_spark.queries import QUERIES
+print(json.dumps([digest.query_digests(), list(QUERIES)]))
 """
 
 
@@ -76,17 +79,19 @@ def newest_greens() -> dict[str, tuple[float, str]]:
     return out
 
 
-def tree_digests(rev: str) -> dict[str, str]:
-    """query_digests() of ``rev``'s gasket_spark, via this digest.py."""
+def tree_state(rev: str) -> tuple[dict[str, str], list[str]]:
+    """(query_digests() via this digest.py, registration order) of
+    ``rev``. The whole tree is extracted: older registries ranked
+    their queries from the artifacts committed beside them."""
     with tempfile.TemporaryDirectory() as tmp:
-        blob = _git("archive", "--format=tar", rev, "gasket_spark",
-                    text=False)
+        blob = _git("archive", "--format=tar", rev, text=False)
         with tarfile.open(fileobj=io.BytesIO(blob)) as tar:
             tar.extractall(tmp, filter="data")
         out = subprocess.run(
-            [sys.executable, "-c", _TREE_DIGESTS, tmp, DIGEST_PY],
+            [sys.executable, "-c", _TREE_STATE, tmp, DIGEST_PY],
             cwd=tmp, check=True, capture_output=True, text=True).stdout
-    return json.loads(out.strip().splitlines()[-1])
+    digests, order = json.loads(out.strip().splitlines()[-1])
+    return digests, order
 
 
 def verified_trees() -> dict[str, str]:
@@ -110,7 +115,13 @@ def recorded() -> str:
     trees = verified_trees()
     verified: dict[str, list] = {}
     for name in sorted({a for _, a in greens.values()}):
-        digests = tree_digests(trees[name])
+        digests, order = tree_state(trees[name])
+        with open(os.path.join(REPO, name)) as fh:
+            ran = set(json.load(fh))
+        if ran != set(order[:len(ran)]):
+            sys.exit(f"{name}: its queries are not the first {len(ran)} "
+                     f"of {trees[name]}'s registry, so that is not the "
+                     "tree its run verified")
         for q, (rnd, art) in greens.items():
             if art == name and q in QUERIES:
                 verified[q] = [int(rnd) if rnd == int(rnd) else rnd,
@@ -125,6 +136,15 @@ def record() -> None:
     with open(os.path.join(REPO, "VERIFIED.json"), "w") as fh:
         fh.write(text)
     print(f"VERIFIED.json: {len(json.loads(text))} queries")
+
+
+def unrecorded(verified: dict[str, list]) -> str | None:
+    """The newest artifact, when ``verified`` stops before its round."""
+    arts = artifacts()
+    rec = max((r for r, _ in verified.values()), default=0)
+    if arts and math.ceil(rec) != arts[-1][0]:
+        return arts[-1][1]
+    return None
 
 
 def show(window: int) -> None:
@@ -146,19 +166,17 @@ def show(window: int) -> None:
     if outside:
         print(f"\nWARNING: {len(outside)} unverified or changed "
               f"queries fall OUTSIDE the window: {outside}")
-    arts = artifacts()
-    rec = max((r for r, _ in verified.values()), default=0)
-    if arts and math.ceil(rec) != arts[-1][0]:
-        print(f"\nWARNING: VERIFIED.json stops at round {rec} but "
-              f"{arts[-1][1]} exists: run `python tools/windowcheck.py "
-              "record`")
+    newest = unrecorded(verified)
+    if newest:
+        print(f"\nWARNING: VERIFIED.json predates {newest}: run "
+              "`python tools/windowcheck.py record`")
 
 
 def main() -> None:
     if sys.argv[1:] == ["record"]:
         record()
     else:
-        show(int(sys.argv[1]) if len(sys.argv) > 1 else 50)
+        show(int(sys.argv[1]) if len(sys.argv) > 1 else WINDOW)
 
 
 if __name__ == "__main__":
